@@ -18,6 +18,7 @@ Usage: python -m contentwise_impressions_spark.cli <command> [sf_dir] [out]
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 from pyspark.sql import functions as F
@@ -66,8 +67,7 @@ def run_statistics(sf_dir: str, out_path: str | None = None) -> None:
 
 def run_tuning(sf_dir: str, history_dir: str | None = None) -> None:
     from .evaluation.metrics import ranking_metrics
-    from .operators.scoring import item_based_scores, recommend_top_k
-    from .operators.similarity import similarity_scores, similarity_top_k
+    from .recommenders.knn import itemknn_recommend
     from .tuning import Categorical, Integer, Real, random_search, results_table
 
     spark = get_spark("cwi-tuning")
@@ -78,38 +78,25 @@ def run_tuning(sf_dir: str, history_dir: str | None = None) -> None:
     test = tagged.filter(F.col("split") == 2).select("user_id", "item_id")
 
     def fit_eval(fit_pairs, holdout, p):
-        train_v = fit_pairs.withColumn("value", F.lit(1.0))
-        w = similarity_top_k(
-            similarity_scores(train_v, p["kind"], shrink=p["shrink"]), p["top_k"]
-        ).select("item_i", "item_j", "sim")
-        recs = recommend_top_k(
-            item_based_scores(train_v, w), 10, train=fit_pairs, round_digits=9
-        ).select("user_id", "item_id", "rank")
+        recs = itemknn_recommend(fit_pairs, holdout, **p)
         return ranking_metrics(recs, holdout, cutoff=10).collect()[0]["map"]
-
-    def objective(p):
-        return fit_eval(train, val, p)
 
     space = {
         "top_k": Integer(5, 50),
         "shrink": Real(0.0, 20.0),
         "kind": Categorical(("cosine", "jaccard", "dice")),
     }
+    history_path = None
     if history_dir:
-        from .tuning import random_search_resumable
-
-        import os
-
         os.makedirs(history_dir, exist_ok=True)
-        best, hist = random_search_resumable(
-            space,
-            objective,
-            f"{history_dir}/ItemKNNCF.parquet",
-            n_cases=8,
-            seed=42,
-        )
-    else:
-        best, hist = random_search(space, objective, n_cases=8, seed=42)
+        history_path = os.path.join(history_dir, "ItemKNNCF.parquet")
+    best, hist = random_search(
+        space,
+        lambda p: fit_eval(train, val, p),
+        n_cases=8,
+        seed=42,
+        history_path=history_path,
+    )
     print(results_table({"ItemKNNCF": hist}).to_string(index=False))
     print("best:", json.dumps(best))
     # last-test refit (SearchBayesianSkopt's evaluate_on_test="last"):
@@ -120,7 +107,6 @@ def run_tuning(sf_dir: str, history_dir: str | None = None) -> None:
 
 def run_results_gathering(history_dir: str) -> None:
     import glob
-    import os
 
     import pandas as pd
 
@@ -138,9 +124,9 @@ def run_results_gathering(history_dir: str) -> None:
 _USAGE = """usage: cwi-spark <command> [args]
 
 commands:
-  statistics [sf_dir] [table]      dataset statistics suite (default cmd)
+  statistics [sf_dir] [out_path]   dataset statistics suite (default cmd)
   generate-splits [sf_dir] [out]   build+cache train/val/test splits
-  tuning [sf_dir] [recommender]    Bayesian hyperparameter search
+  tuning [sf_dir] [history_dir]    resumable random search over ItemKNN
   results-gathering [history_dir]  LaTeX results table from search histories
 """
 

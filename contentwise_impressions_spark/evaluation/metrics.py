@@ -72,16 +72,12 @@ def ranking_metrics(
         .orderBy("rank")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    w_user = Window.partitionBy("user_id")
-    labeled = (
-        labeled.withColumn("cum_hits", F.sum("is_hit").over(w_cum))
-        .withColumn("n_rows_u", F.count("*").over(w_user))
-        .withColumn("n_hits_u", F.sum("is_hit").over(w_user))
-    )
+    labeled = labeled.withColumn("cum_hits", F.sum("is_hit").over(w_cum))
 
+    n_hits, n_recs = F.sum("is_hit"), F.count("*")
     per_user = labeled.groupBy("user_id", "n_test").agg(
-        F.sum("is_hit").alias("n_hits"),
-        F.count("*").alias("n_recs"),
+        n_hits.alias("n_hits"),
+        n_recs.alias("n_recs"),
         F.sum(
             F.col("is_hit") * F.col("cum_hits") / F.col("rank")
         ).alias("ap_num"),
@@ -89,13 +85,14 @@ def ranking_metrics(
         F.sum(F.col("is_hit") / F.col("rank")).alias("arhr"),
         F.sum(F.col("is_hit") / F.log2(F.col("rank") + 1.0)).alias("dcg"),
         # ROC_AUC numerator (metrics.py:104-120): for each hit at rank r,
-        # count non-hits ranked after it: (n_rows−r) − (n_hits−cum_hits)
-        F.sum(
-            F.col("is_hit")
-            * (
-                (F.col("n_rows_u") - F.col("rank"))
-                - (F.col("n_hits_u") - F.col("cum_hits"))
-            )
+        # count non-hits ranked after it, (n_recs−r) − (n_hits−cum_hits);
+        # the sum over hits expands into per-user aggregates (an exact
+        # integer identity, so no whole-user window is needed)
+        (
+            n_hits * n_recs
+            - F.sum(F.col("is_hit") * F.col("rank"))
+            - n_hits * n_hits
+            + F.sum(F.col("is_hit") * F.col("cum_hits"))
         ).alias("auc_num"),
     )
 

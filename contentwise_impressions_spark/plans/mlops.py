@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..evaluation.metrics import ranking_metrics
-from ..operators.scoring import item_based_scores, recommend_top_k, toppop_scores
+from ..operators.scoring import recommend_top_k, toppop_scores
 from ..operators.similarity import (
     column_norms,
     mean_centered,
@@ -25,6 +25,7 @@ from ..operators.similarity import (
 )
 from ..operators.splits import deterministic_split
 from ..recommenders.graph import p3alpha_similarity, rp3beta_similarity
+from ..recommenders.knn import itemknn_recommend
 from ..recommenders.nonpersonalized import global_effects
 from ..sources.interactions import events_as_interactions, implicit_urm
 from ..sources.tables import load_table
@@ -412,14 +413,7 @@ def q_itemknn_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked on round(score, 9) for engine portability.
     """
     train, test = _train_test(spark, sf_dir)
-    train_v = train.withColumn("value", F.lit(1.0))
-    w = similarity_top_k(similarity_scores(train_v, "cosine"), 10).select(
-        "item_i", "item_j", "sim"
-    )
-    scores = item_based_scores(train_v, w)
-    users = test.select("user_id").distinct()
-    scores = scores.join(users, "user_id", "left_semi")
-    return recommend_top_k(scores, 10, train=train, round_digits=9)
+    return itemknn_recommend(train, test, "cosine", shrink=0.0, top_k=10)
 
 
 register(

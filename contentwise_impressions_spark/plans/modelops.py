@@ -2945,9 +2945,8 @@ def q_tuning_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     per case ever reaches the driver, and search state is O(n_cases).
     """
     from ..evaluation.metrics import ranking_metrics
-    from ..operators.scoring import item_based_scores, recommend_top_k
-    from ..operators.similarity import similarity_scores, similarity_top_k
     from ..operators.splits import deterministic_split
+    from ..recommenders.knn import itemknn_recommend
     from ..tuning import Categorical, Integer, Real, random_search
 
     utc(spark)
@@ -2964,14 +2963,7 @@ def q_tuning_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     test = tagged.filter(F.col("split") == 2).select("user_id", "item_id")
 
     def fit_eval(fit_pairs: DataFrame, holdout: DataFrame, p: dict) -> float:
-        train_v = fit_pairs.withColumn("value", F.lit(1.0))
-        w = similarity_top_k(
-            similarity_scores(train_v, p["kind"], shrink=p["shrink"]),
-            p["top_k"],
-        ).select("item_i", "item_j", "sim")
-        recs = recommend_top_k(
-            item_based_scores(train_v, w), 10, train=fit_pairs, round_digits=9
-        ).select("user_id", "item_id", "rank")
+        recs = itemknn_recommend(fit_pairs, holdout, **p)
         return float(
             ranking_metrics(recs, holdout, cutoff=10).collect()[0]["map"]
         )
@@ -3050,15 +3042,13 @@ def q_tuning_refit_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to itemknn_recommendations + toppop_eval_metrics
     — item co-occurrence shuffles once on user_id, W is top-K-pruned per
-    column, scores are semi-joined to test users before ranking (per-user
-    top-K is user-independent, and ranking_metrics aggregates test users
-    only, so the semi-join is an exact optimization the composite's
-    fit_eval skips).
+    column, scores are semi-joined to test users before ranking (exact:
+    ranking_metrics aggregates test users only) — the same
+    ``itemknn_recommend`` call the composite's fit_eval makes.
     """
     from ..evaluation.metrics import ranking_metrics
-    from ..operators.scoring import item_based_scores, recommend_top_k
-    from ..operators.similarity import similarity_scores, similarity_top_k
     from ..operators.splits import deterministic_split
+    from ..recommenders.knn import itemknn_recommend
 
     utc(spark)
     tagged = shared.materialized(
@@ -3071,19 +3061,7 @@ def q_tuning_refit_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fit = tagged.filter(F.col("split") != 2).select("user_id", "item_id")
     test = tagged.filter(F.col("split") == 2).select("user_id", "item_id")
-    fit_v = fit.withColumn("value", F.lit(1.0))
-    w = similarity_top_k(
-        similarity_scores(
-            fit_v, REFIT_BEST["kind"], shrink=REFIT_BEST["shrink"]
-        ),
-        REFIT_BEST["top_k"],
-    ).select("item_i", "item_j", "sim")
-    scores = item_based_scores(fit_v, w).join(
-        test.select("user_id").distinct(), "user_id", "left_semi"
-    )
-    recs = recommend_top_k(
-        scores, 10, train=fit, round_digits=9
-    ).select("user_id", "item_id", "rank")
+    recs = itemknn_recommend(fit, test, **REFIT_BEST)
     return ranking_metrics(recs, test, cutoff=10)
 
 

@@ -29,7 +29,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..sources.interactions import events_as_interactions, implicit_urm
+from ..sources.interactions import (
+    INTERACTION_EVENT_TYPES,
+    events_as_interactions,
+    implicit_urm,
+)
 from ..sources.tables import load_table
 
 _CACHE: dict[tuple[str, str, str], DataFrame] = {}
@@ -66,7 +70,7 @@ def rated(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         inter = events_as_interactions(load_table(spark, sf_dir, "events"))
         return (
-            inter.filter(F.col("event_type").isin("view", "click", "purchase"))
+            inter.filter(F.col("event_type").isin(*INTERACTION_EVENT_TYPES))
             .groupBy("user_id", "item_id")
             .agg(F.avg("value").alias("rating"))
         )

@@ -6,7 +6,6 @@ from .search import (
     fit_with_early_stopping,
     latex_results,
     random_search,
-    random_search_resumable,
     results_table,
 )
 
@@ -16,7 +15,6 @@ __all__ = [
     "Real",
     "bayesian_search",
     "random_search",
-    "random_search_resumable",
     "fit_with_early_stopping",
     "results_table",
     "latex_results",

@@ -15,10 +15,10 @@ the same loop shape with a dependency-free numpy surrogate: 15 random
 starts, then a GP (RBF kernel, Cholesky posterior) + Expected-Improvement
 acquisition over candidate samples — the gp_minimize contract (n_random
 starts, per-case metadata, resumability) without skopt.  `random_search`
-remains as the baseline strategy (the reference's own first 15 evaluations
-are exactly this).  Trials are independent Spark jobs, so a ThreadPool can
-overlap them (scheduler pools), mirroring the reference's process-pool KNN
-sweep (run_parameter_search.py:470-475).
+is the same loop with every case a random start (the reference's own first
+15 evaluations are exactly this).  Trials are independent Spark jobs, so a
+ThreadPool can overlap them (scheduler pools), mirroring the reference's
+process-pool KNN sweep (run_parameter_search.py:470-475).
 """
 
 from __future__ import annotations
@@ -66,45 +66,6 @@ def _sample(space: dict[str, Any], rng: np.random.Generator) -> dict[str, Any]:
         else:
             raise TypeError(f"unknown dimension type for {name}: {dim!r}")
     return out
-
-
-def random_search(
-    space: dict[str, Any],
-    objective: Callable[[dict[str, Any]], float],
-    n_cases: int = 15,
-    seed: int = 42,
-    maximize: bool = True,
-) -> tuple[dict[str, Any], pd.DataFrame]:
-    """Seeded random search; returns (best_params, history).
-
-    `objective(params) -> metric` runs one trial (fit + evaluate as Spark
-    jobs).  History mirrors the reference's search metadata: params,
-    metric, wall-clock per case, best-so-far flag.
-    """
-    rng = np.random.default_rng(seed)
-    rows = []
-    best_metric, best_params = None, None
-    for case in range(n_cases):
-        params = _sample(space, rng)
-        t0 = time.perf_counter()
-        metric = float(objective(params))
-        elapsed = time.perf_counter() - t0
-        better = (
-            best_metric is None
-            or (metric > best_metric if maximize else metric < best_metric)
-        )
-        if better:
-            best_metric, best_params = metric, params
-        rows.append(
-            {
-                "case": case,
-                **{f"param_{k}": v for k, v in params.items()},
-                "metric": metric,
-                "train_eval_sec": round(elapsed, 3),
-                "is_best": better,
-            }
-        )
-    return best_params, pd.DataFrame(rows)
 
 
 def _encode(params: dict[str, Any], space: dict[str, Any]) -> np.ndarray:
@@ -204,13 +165,15 @@ def bayesian_search(
     (ParameterTuning/SearchBayesianSkopt.py:21-271: gp_minimize, 50 cases
     / 15 random starts) without the skopt dependency.
 
-    After `n_random_starts` seeded random cases, each case fits the GP on
-    all observations and evaluates the candidate (from `n_candidates`
-    fresh space samples) with the highest Expected Improvement.  With
-    `history_path`, completed cases replay from the persisted parquet
-    (params are stored per case — unlike seeded random search the chosen
-    points depend on observed metrics), mirroring SearchBayesianSkopt's
-    metadata-zip resume (:72-130).
+    `objective(params) -> metric` runs one trial (fit + evaluate as Spark
+    jobs).  After `n_random_starts` seeded random cases, each case fits the
+    GP on all observations and evaluates the candidate (from `n_candidates`
+    fresh space samples) with the highest Expected Improvement.  History
+    mirrors the reference's search metadata: params, metric, wall-clock
+    per case, best-so-far flag.  With `history_path`, completed cases
+    replay from the persisted parquet (params are stored per case — the
+    GP-chosen points depend on observed metrics), mirroring
+    SearchBayesianSkopt's metadata-zip resume (:72-130).
     """
     import os
 
@@ -235,6 +198,7 @@ def bayesian_search(
                     # which branch the live run took (1 draw vs n_candidates
                     # draws) — needed to replay the exact RNG consumption;
                     # None for history files written before this column
+                    # (including the older random-search-only format)
                     "was_random": (
                         bool(r["was_random"]) if "was_random" in prev.columns else None
                     ),
@@ -310,6 +274,32 @@ def bayesian_search(
     return best_params, pd.DataFrame(rows)
 
 
+def random_search(
+    space: dict[str, Any],
+    objective: Callable[[dict[str, Any]], float],
+    n_cases: int = 15,
+    seed: int = 42,
+    maximize: bool = True,
+    history_path: str | None = None,
+) -> tuple[dict[str, Any], pd.DataFrame]:
+    """Seeded random search; returns (best_params, history).
+
+    `bayesian_search` with every case a random start: the same seeded
+    parameter sequence case for case, the same per-case history, and the
+    same `history_path` resume (history files without a ``was_random``
+    column replay too — every case of a random search is random).
+    """
+    return bayesian_search(
+        space,
+        objective,
+        n_cases=n_cases,
+        n_random_starts=n_cases,
+        seed=seed,
+        maximize=maximize,
+        history_path=history_path,
+    )
+
+
 def fit_with_early_stopping(
     run_epochs: Callable[[int], None],
     evaluate: Callable[[], float],
@@ -365,61 +355,6 @@ def results_table(histories: dict[str, pd.DataFrame]) -> pd.DataFrame:
             }
         )
     return pd.DataFrame(rows)
-
-
-def random_search_resumable(
-    space: dict[str, Any],
-    objective: Callable[[dict[str, Any]], float],
-    history_path: str,
-    n_cases: int = 15,
-    seed: int = 42,
-    maximize: bool = True,
-) -> tuple[dict[str, Any], pd.DataFrame]:
-    """Resumable search: completed cases are replayed from the persisted
-    history instead of re-running their trials.
-
-    Reference: SearchBayesianSkopt.py:72-130 reloads the metadata zip and
-    replays evaluated configs on restart.  Sampling is seeded, so case k
-    always receives the same params — the history only needs (case,
-    metric); params are re-derived, keeping the artifact engine-agnostic.
-    """
-    import os
-
-    done: dict[int, float] = {}
-    if os.path.exists(history_path):
-        prev = pd.read_parquet(history_path)
-        done = dict(zip(prev["case"].astype(int), prev["metric"].astype(float)))
-
-    rng = np.random.default_rng(seed)
-    rows = []
-    best_metric, best_params = None, None
-    for case in range(n_cases):
-        params = _sample(space, rng)  # same stream → same params per case
-        if case in done:
-            metric, elapsed, resumed = done[case], 0.0, True
-        else:
-            t0 = time.perf_counter()
-            metric = float(objective(params))
-            elapsed = time.perf_counter() - t0
-            resumed = False
-        better = (
-            best_metric is None
-            or (metric > best_metric if maximize else metric < best_metric)
-        )
-        if better:
-            best_metric, best_params = metric, params
-        rows.append(
-            {
-                "case": case,
-                **{f"param_{k}": v for k, v in params.items()},
-                "metric": metric,
-                "train_eval_sec": round(elapsed, 3),
-                "is_best": better,
-                "resumed": resumed,
-            }
-        )
-        pd.DataFrame(rows).to_parquet(history_path, index=False)
-    return best_params, pd.DataFrame(rows)
 
 
 def latex_results(

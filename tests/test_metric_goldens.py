@@ -76,6 +76,27 @@ def test_auc_golden(spark):
     m = ranking_metrics(recs, test, cutoff=5).collect()[0]
     assert m["roc_auc"] == pytest.approx((2.0 / 3 + 1.0 / 3) / 2)
 
+    # metrics.py:111-120 edge cases: a list of only hits scores 1.0, a list
+    # without hits 0.0
+    edges = [(LIST_2, POS_ITEMS + [3], 1.0), (LIST_3, POS_ITEMS, 0.0)]
+    for ranked, pos, auc in edges:
+        recs, test = _frames(spark, ranked, pos)
+        m = ranking_metrics(recs, test, cutoff=5).collect()[0]
+        assert m["roc_auc"] == auc
+    # all three as users of one frame: per-user AUCs, then the mean
+    users = [(LIST_1, [2, 4])] + [(lst, pos) for lst, pos, _ in edges]
+    recs = spark.createDataFrame(
+        [(u, item, r + 1) for u, (lst, _) in enumerate(users)
+         for r, item in enumerate(lst)],
+        ["user_id", "item_id", "rank"],
+    )
+    test = spark.createDataFrame(
+        [(u, p) for u, (_, pos) in enumerate(users) for p in pos],
+        ["user_id", "item_id"],
+    )
+    m = ranking_metrics(recs, test, cutoff=5).collect()[0]
+    assert m["roc_auc"] == pytest.approx((0.5 + 1.0 + 0.0) / 3)
+
 
 def test_ndcg_binary_golden(spark):
     # metrics.py:182-211 with implicit rel=1: DCG = Σ 1/log2(rank+1) at hit

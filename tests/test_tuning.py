@@ -17,6 +17,7 @@ from contentwise_impressions_spark.operators.similarity import (
     similarity_top_k,
 )
 from contentwise_impressions_spark.operators.splits import deterministic_split
+from contentwise_impressions_spark.recommenders.knn import itemknn_recommend
 from contentwise_impressions_spark.sources.interactions import implicit_urm
 from contentwise_impressions_spark.sources.tables import load_table
 from contentwise_impressions_spark.tuning import (
@@ -29,8 +30,7 @@ from contentwise_impressions_spark.tuning import (
 )
 
 
-@pytest.fixture(scope="module")
-def split(spark, sf_dir):
+def _train_val(spark, sf_dir):
     urm = implicit_urm(load_table(spark, sf_dir, "events"))
     tagged = deterministic_split(urm, "user_id", "item_id", [0.7, 0.1, 0.2])
     train = tagged.filter(F.col("split") == 0).select("user_id", "item_id").cache()
@@ -39,16 +39,36 @@ def split(spark, sf_dir):
     return train, val
 
 
-def _itemknn_map10(train, val, top_k, shrink, kind):
+@pytest.fixture(scope="module")
+def split(spark, sf_dir):
+    return _train_val(spark, sf_dir)
+
+
+@pytest.mark.parametrize("kind", ["cosine", "dice"])
+def test_itemknn_semi_join_is_exact(spark, sf01_dir, kind):
+    """itemknn_recommend ranks only the holdout users; ranking_metrics
+    aggregates only users with holdout rows, so every metric must equal the
+    one over the unrestricted operator chain (all train users ranked).
+    Runs at sf0.01 so validation hits exist (MAP > 0)."""
+    train, val = _train_val(spark, sf01_dir)
+    shrink, top_k = 5.0, 15
+    restricted = ranking_metrics(
+        itemknn_recommend(train, val, kind, shrink, top_k), val, cutoff=10
+    ).collect()[0]
+
     train_v = train.withColumn("value", F.lit(1.0))
     w = similarity_top_k(
         similarity_scores(train_v, kind, shrink=shrink), top_k
     ).select("item_i", "item_j", "sim")
-    scores = item_based_scores(train_v, w)
-    recs = recommend_top_k(scores, 10, train=train, round_digits=9).select(
-        "user_id", "item_id", "rank"
+    full_recs = recommend_top_k(
+        item_based_scores(train_v, w), 10, train=train, round_digits=9
     )
-    return ranking_metrics(recs, val, cutoff=10).collect()[0]["map"]
+    full = ranking_metrics(full_recs, val, cutoff=10).collect()[0]
+
+    assert restricted["map"] > 0.0
+    assert restricted.asDict().keys() == full.asDict().keys()
+    for col, v in full.asDict().items():
+        assert restricted[col] == pytest.approx(v, rel=1e-12, abs=1e-12), col
 
 
 def test_random_search_finds_best(split):
@@ -58,12 +78,12 @@ def test_random_search_finds_best(split):
         "shrink": Real(0.0, 10.0),
         "kind": Categorical(("cosine", "jaccard")),
     }
-    best, hist = random_search(
-        space,
-        lambda p: _itemknn_map10(train, val, p["top_k"], p["shrink"], p["kind"]),
-        n_cases=4,
-        seed=7,
-    )
+
+    def map10(p):
+        recs = itemknn_recommend(train, val, **p)
+        return ranking_metrics(recs, val, cutoff=10).collect()[0]["map"]
+
+    best, hist = random_search(space, map10, n_cases=4, seed=7)
     assert len(hist) == 4
     assert hist["metric"].max() == pytest.approx(
         hist[hist["is_best"]]["metric"].iloc[-1]
@@ -91,27 +111,37 @@ def test_early_stopping_stops_and_keeps_best():
 
 
 def test_random_search_resume(tmp_path):
-    from contentwise_impressions_spark.tuning.search import (
-        Integer,
-        random_search_resumable,
-    )
+    import pandas as pd
 
-    calls = []
-
-    def objective(p):
-        calls.append(p["x"])
-        return float(p["x"])
-
-    hist_path = str(tmp_path / "hist.parquet")
     space = {"x": Integer(0, 100)}
-    best1, h1 = random_search_resumable(space, objective, hist_path, n_cases=3, seed=1)
-    n_calls_first = len(calls)
-    assert n_calls_first == 3
-    # resume with more cases: the first 3 must replay, only 2 new trials run
-    best2, h2 = random_search_resumable(space, objective, hist_path, n_cases=5, seed=1)
-    assert len(calls) == n_calls_first + 2
-    assert h2["resumed"].tolist() == [True, True, True, False, False]
-    assert (h2.iloc[:3]["metric"].values == h1["metric"].values).all()
+    _, fresh = random_search(space, lambda p: float(p["x"]), n_cases=5, seed=1)
+    # legacy_format: the history earlier random-search runs wrote, which
+    # has no was_random column
+    for legacy_format in (False, True):
+        calls = []
+
+        def objective(p):
+            calls.append(p["x"])
+            return float(p["x"])
+
+        hist_path = str(tmp_path / f"hist_{legacy_format}.parquet")
+        _, h1 = random_search(
+            space, objective, n_cases=3, seed=1, history_path=hist_path
+        )
+        assert len(calls) == 3
+        if legacy_format:
+            pd.read_parquet(hist_path).drop(columns=["was_random"]).to_parquet(
+                hist_path, index=False
+            )
+        # resume with more cases: the first 3 must replay, only 2 new
+        # trials run, and the cases match one uninterrupted run
+        _, h2 = random_search(
+            space, objective, n_cases=5, seed=1, history_path=hist_path
+        )
+        assert len(calls) == 3 + 2
+        assert h2["resumed"].tolist() == [True, True, True, False, False]
+        assert (h2.iloc[:3]["metric"].values == h1["metric"].values).all()
+        assert h2["param_x"].tolist() == fresh["param_x"].tolist()
 
 
 def test_latex_results_renders():
